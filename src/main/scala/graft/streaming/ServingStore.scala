@@ -1,10 +1,12 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.util.Try
+import scala.jdk.CollectionConverters._
+import scala.util.{Try, Using}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Keyed, idempotent serving store over parquet (SURVEY.md §2.1 S7/S8,
   * §2.8 "Delivery"; reference `insert_data_to_HBase.py:6-46` — rowkey =
@@ -25,6 +27,21 @@ import org.apache.spark.sql.functions._
   *    after recovery; upserts with `batchId <=` the recorded high-water
   *    mark are skipped, making the sink idempotent (ST2).
   *
+  * On-disk layout of a store directory:
+  * {{{
+  *   v=N/part-*.parquet   the snapshot's rows
+  *   v=N/_schema.json     the snapshot's schema (StructType JSON)
+  *   _CURRENT             "N,batchId": committed version, high-water mark
+  * }}}
+  * Every commit runs in the order parquet → `_schema.json` → pointer,
+  * so a reader that sees version N in `_CURRENT` always finds N's
+  * schema beside its files, and [[read]] resolves the snapshot without
+  * the footer-inference Spark job a bare `spark.read.parquet` runs. A
+  * `v=N` written before the sidecar existed is read by inference. The
+  * `_` prefix keeps the sidecar out of Spark's file index. Each commit
+  * keeps the version it superseded (in-flight readers may hold it),
+  * and removes older versions and stale `_CURRENT.tmp.*` files.
+  *
   * Scale note: full-snapshot rewrite is correct but O(store) per batch;
   * at 100 TB the same pointer-swap protocol applies per key-range
   * partition (only partitions containing batch keys are rewritten),
@@ -34,6 +51,11 @@ import org.apache.spark.sql.functions._
 object ServingStore {
 
   private def pointerPath(store: String): Path = Paths.get(store, "_CURRENT")
+
+  private def schemaPath(store: String, ver: Long): Path =
+    Paths.get(store, s"v=$ver", "_schema.json")
+
+  private val Version = "v=(\\d+)".r
 
   /** Target snapshot file size (guide §6: aim for output files in the
     * 128 MB–1 GB range). Conf-overridable so a cluster deployment can
@@ -109,11 +131,15 @@ object ServingStore {
   }
 
   /** Current snapshot as a DataFrame (empty-schema error if never
-    * written — callers create the store via `upsert` first). */
+    * written — callers create the store via `upsert` first). Read with
+    * the schema committed beside the snapshot, so resolving it runs no
+    * Spark job; a snapshot without one is read by inference. */
   def read(spark: SparkSession, store: String): DataFrame = {
     val (v, _) = pointer(store)
     require(v > 0, s"serving store $store has no committed snapshot")
-    spark.read.parquet(s"$store/v=$v")
+    val schema = Some(schemaPath(store, v)).filter(Files.exists(_))
+      .map(p => DataType.fromJson(Files.readString(p)).asInstanceOf[StructType])
+    schema.fold(spark.read)(spark.read.schema).parquet(s"$store/v=$v")
   }
 
   /** Apply one micro-batch as a keyed upsert. Returns false (no-op) when
@@ -128,28 +154,39 @@ object ServingStore {
       else read(spark, store)
         .join(batch.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
         .unionByName(batch)
-    val newVer = curVer + 1
-    sized(merged, store, curVer,
-        Some(batch.queryExecution.optimizedPlan.stats.sizeInBytes))
-      .write.mode("overwrite").parquet(s"$store/v=$newVer")
-    commit(store, curVer, newVer, batchId)
+    writeSnapshot(sized(merged, store, curVer,
+        Some(batch.queryExecution.optimizedPlan.stats.sizeInBytes)),
+      store, curVer, batchId)
     true
   }
 
-  /** Atomic pointer swap (write-temp + ATOMIC_MOVE — readers see either
-    * the old or the new version, never a torn pointer), then reap
-    * snapshots older than the one just superseded (kept for in-flight
-    * readers). */
-  private def commit(store: String, curVer: Long, newVer: Long, batchId: Long): Unit = {
+  /** Commit `frame` as version `curVer + 1`: parquet files, then the
+    * `_schema.json` sidecar, then the atomic pointer swap (write-temp +
+    * ATOMIC_MOVE — readers see either the old or the new version, never
+    * a torn pointer). One listing of the store then reaps every version
+    * older than the one just superseded (kept for in-flight readers)
+    * and any `_CURRENT.tmp.*` a crash between write and move left. */
+  private def writeSnapshot(frame: DataFrame, store: String, curVer: Long,
+      batchId: Long): Unit = {
+    val newVer = curVer + 1
+    frame.write.mode("overwrite").parquet(s"$store/v=$newVer")
+    Files.writeString(schemaPath(store, newVer), frame.schema.toNullable.json)
     val tmp = Paths.get(store, s"_CURRENT.tmp.$newVer")
     Files.writeString(tmp, s"$newVer,$batchId")
     Files.move(tmp, pointerPath(store), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
-    (1L until curVer).foreach { old =>
-      val dir = Paths.get(store, s"v=$old")
-      if (Files.exists(dir)) Try {
-        Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => Files.deleteIfExists(f))
+    Using.resource(Files.list(Paths.get(store))) { entries =>
+      entries.iterator().asScala.toList
+    }.foreach { p =>
+      p.getFileName.toString match {
+        case Version(k) if k.toLong < curVer => Try {
+          Using.resource(Files.walk(p)) { tree =>
+            tree.sorted(java.util.Comparator.reverseOrder())
+              .forEach(f => { Files.deleteIfExists(f); () })
+          }
+        }
+        case name if name.startsWith("_CURRENT.tmp.") => Files.deleteIfExists(p); ()
+        case _ =>
       }
     }
   }
@@ -169,10 +206,8 @@ object ServingStore {
     require(targetFiles > 0, s"targetFiles must be positive, got $targetFiles")
     val (curVer, lastBatch) = pointer(store)
     if (curVer == 0) return false
-    val newVer = curVer + 1
-    read(spark, store).coalesce(targetFiles)
-      .write.mode("overwrite").parquet(s"$store/v=$newVer")
-    commit(store, curVer, newVer, lastBatch)
+    writeSnapshot(read(spark, store).coalesce(targetFiles),
+      store, curVer, lastBatch)
     true
   }
 
@@ -182,11 +217,9 @@ object ServingStore {
       keys: Seq[String], batchId: Long): Boolean = {
     val (curVer, lastBatch) = pointer(store)
     if (batchId <= lastBatch || curVer == 0) return false
-    val remaining = sized(
-      read(spark, store).filter(!col(keyCol).isin(keys: _*)), store, curVer)
-    val newVer = curVer + 1
-    remaining.write.mode("overwrite").parquet(s"$store/v=$newVer")
-    commit(store, curVer, newVer, batchId)
+    writeSnapshot(
+      sized(read(spark, store).filter(!col(keyCol).isin(keys: _*)), store, curVer),
+      store, curVer, batchId)
     true
   }
 }
